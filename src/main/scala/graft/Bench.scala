@@ -31,30 +31,13 @@ object Bench {
     val startNs = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - startNs) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // 900 → 1020 in round 13 (the round-12 verdict's ask #5 sanctions a
     // modest raise); round 14 additionally dropped the separate warm pass
     // (pass 1 warms), so cold pass 1 + a FULL warm pass 2 fits ~1000 s
     // even at driver-host speeds — every query's record becomes a min
     // over ≥2 reps (multi_rep == registry size) instead of r13's 262.
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1020").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Codegen class cache sized to the workload (round 17, guide §1.2
-      // "fixed per-query overhead"): the static default (100 entries)
-      // holds ~10 queries' worth of WholeStageCodegen units, so a
-      // 392-query pass evicts EVERYTHING between a query's pass-1 and
-      // pass-2 reps and every rep re-compiles every stage (Janino,
-      // ~20-80 ms per unit, driver-side serial). Production multi-query
-      // drivers size this cache to their live query set for exactly this
-      // reason; scale-independent (it caches compiled classes keyed by
-      // generated source, never data or results).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     // Each query is timed up to `reps` times and the MIN is reported: a
     // single pass lets co-tenant host stalls pollute the official artifact
     // (round 5's run absorbed 100-300x stalls on individual queries —
@@ -104,22 +87,16 @@ object Bench {
     // "serial code". Record each query's total EXECUTOR TASK TIME next to
     // its wall: task_sec >> wall ⇒ the work ran parallel; task_sec << wall
     // ⇒ the wall is planning/scheduling overhead that more cores cannot
-    // move. Purely additive — an async listener the scheduler fires
-    // anyway; nothing on the timed path changes. task_sec rides the FILE
-    // artifact (full map) and the stdout line carries one summary scalar.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        taskMs.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
-    })
+    // move. Purely additive — the run recorder reads the scheduler's
+    // listener events; nothing on the timed path changes. task_sec rides
+    // the FILE artifact (full map) and the stdout line carries one summary
+    // scalar.
+    val recorder = new Recorder(spark)
 
     // ---- shared mutable record (timing loop + shutdown hook) ----
     val lock = new Object
     val mins = scala.collection.mutable.HashMap.empty[String, Double]
-    // task seconds of the rep that holds each query's min wall (async
-    // listener counter read outside the timed window; late stage events
-    // can leak ~ms across query boundaries — fine for a diagnostic field)
+    // task seconds of the rep that holds each query's min wall
     val taskSec = scala.collection.mutable.HashMap.empty[String, Double]
     // queries that got at least a 2nd timed rep (slowest-first pass 2+) —
     // reported so the artifact shows how much of the record is min-of-N
@@ -155,7 +132,7 @@ object Bench {
       val snap = snapshot()
       val singles = snap.map(_._1).filterNot(reppedTwice.contains)
       // per-query executor task seconds for the min-wall rep (scaling
-      // legibility; see the taskMs listener note). Additive field.
+      // legibility; see the recorder note). Additive field.
       val tmap = lock.synchronized {
         snap.map { case (n, _) => "\"" + n + "\":" + fmt(taskSec.getOrElse(n, 0.0)) }
           .mkString("{", ",", "}")
@@ -242,20 +219,9 @@ object Bench {
     // 13 driver speeds, cold pass (~520 s) + warm pass (~480 s) < 1020 s,
     // so multi_rep reaches the full registry instead of 262.
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val tm0 = taskMs.get()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // isolate reps and queries: caches built inside one query (the
-      // augmentation pipelines pin ~GBs of pixel rows) must not stay
-      // resident and GC-pressure whatever happens to run later in map
-      // order — measured 0.8 s -> 12 s on the last query before this
-      // was added
-      spark.catalog.clearCache()
-      // clearCache misses localCheckpoint blocks (iterative ops); drop them too
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (dt, (taskMs.get() - tm0) / 1e3)
+      val r = recorder.noop(name)(fn(spark, sfDir))
+      r.failure.foreach(e => System.err.println(s"[bench] $name: ${e.getMessage}"))
+      (r.wallS, r.taskSec)
     }
 
     var pass = 1

@@ -2,8 +2,6 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round instrument: dump `explain("formatted")` for NAMED
   * registry queries, one file per query, so before/after plan diffs can be
   * committed as review artifacts (plans/r16/<name>_<tag>.txt).
@@ -20,16 +18,7 @@ object PlanDump {
     val outDir = args(1)
     val tag = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen class cache sized to the 392-query registry (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCpus = 32, logLevel = "ERROR")
     new File(outDir).mkdirs()
     val byName = SparkEntry.queries
     names.foreach { name =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Reproducible scale probe (COVERAGE.md "Scale probe" section): replicate
@@ -53,16 +52,7 @@ object ScaleProbe {
     // neighbors were doing, not an engine cost. Default 1 keeps the historical
     // recipe; the 1000x tier runs with 3.
     val runsPerPoint = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "1").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen class cache sized to the 392-query registry (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
 
     // Always regenerate: a stale /tmp cache keyed on nothing silently
     // decoupled the probe corpus from the base dir it claims to scale.
@@ -200,16 +190,13 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$bigDir/part.parquet")
     }
 
+    // noop runs drop localCheckpoint pins too (iterative ops like x31);
+    // leaving them pinned skews exactly the base-vs-big ratios probed here
+    val recorder = new Recorder(spark)
     def timeOnce(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      // clearCache misses localCheckpoint blocks (iterative ops like x31);
-      // leaving them pinned skews exactly the base-vs-big ratios probed here
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      t
+      val r = recorder.noop(name)(SparkEntry.queries(name)(spark, dir))
+      r.failure.foreach(throw _)
+      r.wallS
     }
     def time(name: String, dir: String): Double =
       (1 to runsPerPoint).map(_ => timeOnce(name, dir)).min

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 import graft.{SparkEntry, SparkSpec}
 
-/** Plan-regression gate: turns the per-round manual `Explain` audit into a
+/** Plan-regression gate: turns the per-round manual plan audit into a
   * test. Every registered query's physical plan is asserted free of the
   * two known 100 TB scale-killers, and known-filtering queries are
   * asserted to actually push their predicates into the parquet scan.
